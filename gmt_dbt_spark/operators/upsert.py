@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from gmt_dbt_spark.catalog import table
 from gmt_dbt_spark.registry import query
 from gmt_dbt_spark.sources.readers import scan_json, schema_from_json_file
-from gmt_dbt_spark.sources.sinks import StagingTable, sink_overwrite
+from gmt_dbt_spark.sources.sinks import StagingTable, overwrite_swap, sink_overwrite
 
 
 def merge_upsert(target: DataFrame, staging: DataFrame, keys: list[str]) -> DataFrame:
@@ -78,10 +78,7 @@ def final_load(
         raise ValueError(f"unknown loading_type: {loading_type!r}")
     with StagingTable(spark, data, staging_path) as staged:
         target = spark.read.parquet(target_path)
-        # localCheckpoint materializes the merge and cuts lineage to
-        # target_path so we can overwrite the path we just read.
-        merged = merge_upsert(target, staged, keys).localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(target_path)
+        overwrite_swap(merge_upsert(target, staged, keys), target_path)
 
 
 def upsert_partitioned(

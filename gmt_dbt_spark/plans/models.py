@@ -16,9 +16,11 @@ model surface on Spark:
     dependency): config() is stripped into node config, source() is
     resolved against a source mapping (the analogue of
     `models/yelp/source.yml`), ref() against sibling models.
-  - **execute**: topological order from ref-edges, independent models
-    submitted concurrently via ``ThreadPoolExecutor(threads)`` —
-    mirroring dbt's 4-thread scheduling; Spark's FAIR-capable
+  - **execute**: a ready queue over the ref-edges, the way dbt's graph
+    queue schedules with 4 threads: a model is submitted to
+    ``ThreadPoolExecutor(threads)`` the moment its last parent
+    finishes, not when a whole topological level has, so a slow model
+    holds back only its own descendants. Spark's FAIR-capable
     scheduler handles intra-job parallelism.
   - **materialize**: ``table`` → parquet CTAS into the project's
     warehouse dir + re-registered as a view over the materialized
@@ -42,7 +44,7 @@ from __future__ import annotations
 import os
 import re
 import shutil
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -226,9 +228,11 @@ def compile_model(
 def _toposort_levels(
     models: dict[str, Model], assume_done: set[str] | None = None
 ) -> list[list[Model]]:
-    """Kahn levels: each level's models are mutually independent and
-    run concurrently (dbt's thread scheduling unit). ``assume_done``
-    marks dependencies satisfied OUTSIDE this run (deferred state)."""
+    """Kahn levels: each level's models are mutually independent.
+    Used for cycle detection and for the passes that need a
+    topological order (ephemeral inlining, deferred registration);
+    ``run`` schedules by ready queue instead. ``assume_done`` marks
+    dependencies satisfied OUTSIDE this run (deferred state)."""
     remaining = dict(models)
     done: set[str] = set(assume_done or ())
     levels: list[list[Model]] = []
@@ -366,6 +370,7 @@ class ModelProject:
             self._enforce_contract(model, df)
             if exists:
                 from gmt_dbt_spark.operators.upsert import merge_upsert
+                from gmt_dbt_spark.sources.sinks import overwrite_swap
 
                 key = model.config.get("unique_key")
                 if not key:
@@ -373,10 +378,9 @@ class ModelProject:
                         f"incremental model '{model.name}' needs unique_key"
                     )
                 target = self.spark.read.parquet(path)
-                merged = merge_upsert(
-                    target, df.select(*target.columns), [key]
-                ).localCheckpoint(eager=True)
-                merged.write.mode("overwrite").parquet(path)
+                overwrite_swap(
+                    merge_upsert(target, df.select(*target.columns), [key]), path
+                )
             else:
                 df.write.mode("overwrite").parquet(path)
             df = self.spark.read.parquet(path)
@@ -543,13 +547,39 @@ class ModelProject:
                 for n in list(chosen):
                     chosen |= self._ancestors(n)
             models = {k: v for k, v in self.models.items() if k in chosen}
+        order = [m.name for level in _toposort_levels(models, assume_done) for m in level]
+        # Ready queue: a model is submitted once every parent in this
+        # run has finished. After the first failure nothing new is
+        # submitted; running models finish, then the failure re-raises.
+        waiting = {n: {d for d in models[n].depends_on if d in models} for n in order}
+        children: dict[str, list[str]] = {n: [] for n in order}
+        for n, deps in waiting.items():
+            for d in deps:
+                children[d].append(n)
         results: dict[str, DataFrame] = {}
+        error: BaseException | None = None
         with ThreadPoolExecutor(max_workers=self.threads) as pool:
-            for level in _toposort_levels(models, assume_done):
-                futures = {m.name: pool.submit(self._materialize, m) for m in level}
-                for name, fut in futures.items():
-                    results[name] = fut.result()
-        return results
+            running = {
+                pool.submit(self._materialize, models[n]): n
+                for n in order
+                if not waiting[n]
+            }
+            while running:
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in done:
+                    name = running.pop(fut)
+                    try:
+                        results[name] = fut.result()
+                    except BaseException as e:
+                        error = error or e
+                    if error is None:
+                        for c in children[name]:
+                            waiting[c].discard(name)
+                            if not waiting[c]:
+                                running[pool.submit(self._materialize, models[c])] = c
+        if error is not None:
+            raise error
+        return {n: results[n] for n in order}
 
 
 def load_models_dir(models_dir: str) -> tuple[list[Model], dict]:

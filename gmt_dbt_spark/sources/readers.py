@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -134,19 +135,44 @@ def ingest_directory(spark: SparkSession, src_dir: str, warehouse_dir: str) -> i
     (metadata-only — the reference rewrites file bytes,
     `main.py:240-245`; we rename columns in the projection), and
     write a parquet staging table per file under ``warehouse_dir``.
-    Upload concurrency/retry/timeout (`main.py:94-188`) collapse
-    into Spark's distributed write + task retry. Returns the number
-    of tables written."""
+
+    Files load concurrently, as the reference's upload thread pool
+    does (`main.py:94-188`): one task per file (scan, sanitize,
+    write) on a pool as wide as the session's default parallelism,
+    so one file's schema inference and small write jobs overlap the
+    others'. Files whose names sanitize to the same table load in
+    one task, in discovery order, so the last one still wins. Retry
+    and timeout collapse into Spark's task retry. The first failing
+    file (in discovery order) is re-raised with its path in the
+    message. Returns the number of files loaded."""
     from gmt_dbt_spark.sources.sanitize import sanitize_columns, sanitize_table_name
 
-    n = 0
     json_files = sorted(
         set(find_files(src_dir, ".json")) | set(find_files(src_dir, ".ndjson"))
     )
-    for path in json_files + find_files(src_dir, ".csv"):
-        df = scan_csv(spark, path) if path.endswith(".csv") else scan_json(spark, path)
+    paths = json_files + find_files(src_dir, ".csv")
+    by_table: dict[str, list[str]] = {}
+    for path in paths:
         name = sanitize_table_name(os.path.splitext(os.path.basename(path))[0])
+        by_table.setdefault(name, []).append(path)
+
+    def load_table(name: str, group: list[str]) -> None:
         out = os.path.join(warehouse_dir, name)
-        sanitize_columns(df).write.mode("overwrite").parquet(out)
-        n += 1
-    return n
+        for path in group:
+            scan = scan_csv if path.endswith(".csv") else scan_json
+            try:
+                sanitize_columns(scan(spark, path)).write.mode("overwrite").parquet(out)
+            except Exception as e:
+                raise RuntimeError(f"ingest_directory: loading {path} failed: {e}") from e
+
+    tune(spark)  # once, before the threads share the session
+    workers = max(1, min(len(by_table), spark.sparkContext.defaultParallelism))
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = [pool.submit(load_table, n, g) for n, g in by_table.items()]
+        try:
+            for fut in futures:
+                fut.result()
+        except BaseException:
+            pool.shutdown(cancel_futures=True)
+            raise
+    return len(paths)

@@ -10,12 +10,15 @@ partition pruning on the read side.
 bronze dbt models (CTAS copy into a bronze layer — the models' own
 embedded DDL is a reference bug, SURVEY.md §3.2); `StagingTable` is
 the `<table>_temp` create-merge-drop lifecycle
-(`gcp_function.py:159-164`, drop at `:112`).
+(`gcp_function.py:159-164`, drop at `:112`); `overwrite_swap` is the
+read-modify-write of a target in place (MERGE rewrites).
 """
 
 from __future__ import annotations
 
+import os
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -28,6 +31,26 @@ def sink_overwrite(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
+
+
+def overwrite_swap(df: DataFrame, path: str) -> None:
+    """Replace the table at ``path`` with ``df``, which may read
+    ``path`` itself: write a sibling directory, then rename it over
+    the target. Spark's own overwrite deletes the target before the
+    job runs, so a plan that scans it would need a materialization
+    (an eager local checkpoint) first; the sibling write needs none.
+    A failed write removes the sibling and leaves the old target
+    untouched."""
+    swap = f"{path.rstrip(os.sep)}__swap_{uuid.uuid4().hex[:8]}"
+    try:
+        df.write.mode("errorifexists").parquet(swap)
+    except BaseException:
+        shutil.rmtree(swap, ignore_errors=True)
+        raise
+    if os.path.exists(path):
+        os.rename(path, swap + "_old")
+    os.rename(swap, path)
+    shutil.rmtree(swap + "_old", ignore_errors=True)
 
 
 def sink_ctas(spark: SparkSession, select_df: DataFrame, path: str) -> DataFrame:

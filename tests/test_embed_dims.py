@@ -74,7 +74,7 @@ def test_unrolled_dot_raises_on_off_contract_width(spark, narrow_emb_dir, name):
     from pyspark.errors.exceptions.captured import SparkRuntimeException
 
     with pytest.raises(
-        (SparkRuntimeException, Py4JJavaError, Exception),
+        (SparkRuntimeException, Py4JJavaError),
         match="EMBED_DIMS contract violated",
     ):
         all_queries()[name](spark, narrow_emb_dir).collect()

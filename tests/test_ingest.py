@@ -137,6 +137,26 @@ def test_ingest_directory_end_to_end(spark, tmp_path):
         assert re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", c), c
 
 
+def test_ingest_directory_names_the_failing_file(spark, tmp_path):
+    """One file that cannot load (an empty CSV has no columns to
+    write) fails the whole ingest, and the error names that file
+    even though the files load on parallel threads."""
+    import shutil
+
+    import pytest
+
+    from gmt_dbt_spark.sources.readers import ingest_directory
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for f in ("yelp_tip.ndjson", "yelp_user.ndjson", "lv_temperature.csv"):
+        shutil.copy(os.path.join(FIXTURES, f), src / f)
+    bad = src / "empty_feed.csv"
+    bad.write_text("")
+    with pytest.raises(RuntimeError, match=str(bad)):
+        ingest_directory(spark, str(src), str(tmp_path / "wh"))
+
+
 def test_cli_ingest_then_run_compose(spark, tmp_path):
     """The two CLI surfaces must compose like the reference lifecycle
     (main.py ingest -> dbt run over the same dataset): a model whose

@@ -72,6 +72,56 @@ def test_dag_runs_in_dependency_order(spark, tmp_path):
     assert spark.sql("SELECT COUNT(*) AS n FROM mart").first().n == 1
 
 
+def test_ready_queue_starts_child_before_slow_sibling_finishes(spark, tmp_path):
+    """A model starts as soon as its own parents are done, not when
+    every model of the previous topological level is: `rq_slow` waits
+    for an event that only `rq_c` (child of the fast `rq_b`) sets.
+    Level-barrier scheduling would hold `rq_c` behind `rq_slow`, and
+    `rq_slow` would time out and fail."""
+    import threading
+
+    released = threading.Event()
+
+    def rq_slow(dbt, session):
+        if not released.wait(timeout=30):
+            raise RuntimeError("rq_c did not start while rq_slow was running")
+        return session.range(1)
+
+    def rq_c(dbt, session):
+        df = dbt.ref("rq_b")
+        released.set()
+        return df
+
+    models = [
+        Model("rq_slow", python_fn=rq_slow),
+        Model("rq_b", "SELECT 1 AS x"),
+        Model("rq_c", python_fn=rq_c),
+    ]
+    out = ModelProject(spark, models, {}, str(tmp_path), threads=4).run()
+    assert released.is_set()
+    assert out["rq_c"].collect()[0].x == 1
+    assert list(out) == ["rq_slow", "rq_b", "rq_c"]  # topological order
+
+
+def test_failed_model_stops_its_descendants(spark, tmp_path):
+    """The first failure re-raises after running models finish, and no
+    model is started after it: the failed model's child never runs."""
+
+    def rq_bad(dbt, session):
+        raise RuntimeError("planted model failure")
+
+    models = [
+        Model("rq_bad", python_fn=rq_bad),
+        Model(
+            "rq_after_bad",
+            "{{ config(materialized='table') }} SELECT * FROM {{ ref('rq_bad') }}",
+        ),
+    ]
+    with pytest.raises(RuntimeError, match="planted model failure"):
+        ModelProject(spark, models, {}, str(tmp_path)).run()
+    assert not (tmp_path / "rq_after_bad").exists()
+
+
 def test_dq_primitives(spark):
     df = spark.createDataFrame(
         [(1, "a"), (1, "b"), (2, None), (3, "zz")], "k int, v string"

@@ -82,6 +82,52 @@ def test_final_load_dispatch(spark, target, staging, tmp_path):
         final_load(spark, staging, tpath, spath, ["id"], "Upsert")
 
 
+def _swap_leftovers(path) -> list[str]:
+    return [n for n in os.listdir(path) if "__swap" in n]
+
+
+def test_final_load_failed_batch_keeps_target(spark, target, tmp_path):
+    """A batch whose write raises leaves the target readable and
+    row-identical, and no swap directory behind."""
+    tpath, spath = str(tmp_path / "target"), str(tmp_path / "staging")
+    final_load(spark, target, tpath, spath, ["id"], "Create")
+    before = sorted(map(tuple, spark.read.parquet(tpath).collect()))
+    bad = target.select(
+        "id",
+        F.raise_error(F.lit("planted batch failure")).cast("string").alias("val"),
+        "updated_at",
+    )
+    with pytest.raises(Exception, match="planted batch failure"):
+        final_load(spark, bad, tpath, spath, ["id"], "Update")
+    assert sorted(map(tuple, spark.read.parquet(tpath).collect())) == before
+    assert _swap_leftovers(tmp_path) == []
+
+
+def test_overwrite_swap_failed_rewrite_keeps_target(spark, target, tmp_path):
+    """The read-modify-write case: the rewrite scans the target it
+    replaces and fails part-way. The old target must survive whole."""
+    from gmt_dbt_spark.sources.sinks import overwrite_swap
+
+    tpath = str(tmp_path / "target")
+    target.repartition(3).write.parquet(tpath)
+    before = sorted(map(tuple, spark.read.parquet(tpath).collect()))
+    failing = spark.read.parquet(tpath).withColumn(
+        "val",
+        F.when(F.col("id") == "k5", F.raise_error(F.lit("planted rewrite failure")))
+        .otherwise(F.upper("val")),
+    )
+    with pytest.raises(Exception, match="planted rewrite failure"):
+        overwrite_swap(failing, tpath)
+    assert sorted(map(tuple, spark.read.parquet(tpath).collect())) == before
+    assert _swap_leftovers(tmp_path) == []
+    # and the same rewrite without the fault replaces the target
+    overwrite_swap(spark.read.parquet(tpath).withColumn("val", F.upper("val")), tpath)
+    assert {r.val for r in spark.read.parquet(tpath).collect()} == {
+        f"OLD{i}" for i in range(6)
+    }
+    assert _swap_leftovers(tmp_path) == []
+
+
 def test_upsert_partitioned_touches_only_batch_partitions(spark, tmp_path):
     tpath = str(tmp_path / "ptarget")
     base = spark.createDataFrame(
