@@ -1239,16 +1239,13 @@ def sink_tokenizer_artifacts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sink is a k-row write; the training costs are the two
     trainers' documented shapes."""
     import os
-    import shutil
-    import uuid
 
-    from gmt_dbt_spark.operators.dedup import SCRATCH
+    from gmt_dbt_spark.sources.sinks import scratch_dir
 
     docs = table(spark, sf_dir, "documents")
     merge_rows, _ = _train_chain_batched(docs)
     uni_rows, _, _ = _uni_train(docs)
-    out = os.path.join(SCRATCH, f"tok_artifacts_{uuid.uuid4().hex[:8]}")
-    try:
+    with scratch_dir("tok_artifacts") as out:
         spark.createDataFrame(
             merge_rows, "step int, a string, b string, n bigint"
         ).write.mode("overwrite").parquet(os.path.join(out, "bpe"))
@@ -1279,7 +1276,4 @@ def sink_tokenizer_artifacts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "unigram",
             ["piece", "n_uses", "score"],
         )
-        # lineage-cut from the scratch paths before cleanup
         return bpe.unionByName(uni).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)

@@ -329,8 +329,7 @@ def dedup_fuzzy_unicode(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-text shingle, spuriously pairing with every other
     empty-normalizing doc at jaccard 1.0 — the exact multilingual
     failure mode this surface fixes (pinned in
-    tests/test_unicode_text.py). The md5 hash family is forced (the
-    oracle replays md5 only — the `_hash_family` contract).
+    tests/test_unicode_text.py).
 
     Scale shape: identical to dedup_fuzzy — 96-byte/doc signatures,
     band-key equi-join, verify bounded by |candidates|; text never
@@ -343,11 +342,11 @@ def dedup_fuzzy_unicode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _with_planted(spark, sf_dir)
-    sig = minhash_signature(
-        docs, "doc_id", "text", "md5", unicode=True
-    ).localCheckpoint(eager=True)
-    pairs = lsh_candidates(sig, "md5")
-    cand = lsh_candidate_ids(sig, "md5")
+    sig = minhash_signature(docs, "doc_id", "text", unicode=True).localCheckpoint(
+        eager=True
+    )
+    pairs = lsh_candidates(sig)
+    cand = lsh_candidate_ids(sig)
     return verify_jaccard(
         pairs, docs, "doc_id", "text", 0.6,
         cand_ids=cand, shingle=True, unicode=True,
@@ -687,9 +686,9 @@ def dedup_cjk_bigram_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _with_planted(spark, sf_dir)
     grams = _cjk_gram_rows(src)
-    sig = sig_from_rows(grams, "md5").localCheckpoint(eager=True)
-    pairs = lsh_candidates(sig, "md5")
-    cand = lsh_candidate_ids(sig, "md5")
+    sig = sig_from_rows(grams).localCheckpoint(eager=True)
+    pairs = lsh_candidates(sig)
+    cand = lsh_candidate_ids(sig)
     # r10 optimization pass (guide §2.4, the shingle_sets treatment
     # at the per-run grain): prune DOCS first (semi-join on the
     # narrow id), then build each candidate's distinct gram set

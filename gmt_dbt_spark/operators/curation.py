@@ -1578,13 +1578,8 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     keepers = lab0.filter(F.col("q") & (F.col("doc_id") == F.col("kid")))
 
-    from gmt_dbt_spark.operators.dedup import _hash_family
-
-    fam = _hash_family()  # resolved once per plan (advisor r5)
-    sig = minhash_signature(keepers, "doc_id", "text", fam).localCheckpoint(
-        eager=True
-    )
-    banded = banded_sig(sig, fam)
+    sig = minhash_signature(keepers, "doc_id", "text").localCheckpoint(eager=True)
+    banded = banded_sig(sig)
     l, r = banded.alias("l"), banded.alias("r")
     cand = (
         l.join(

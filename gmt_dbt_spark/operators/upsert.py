@@ -28,7 +28,12 @@ from pyspark.sql import functions as F
 from gmt_dbt_spark.catalog import table
 from gmt_dbt_spark.registry import query
 from gmt_dbt_spark.sources.readers import scan_json, schema_from_json_file
-from gmt_dbt_spark.sources.sinks import StagingTable, overwrite_swap, sink_overwrite
+from gmt_dbt_spark.sources.sinks import (
+    StagingTable,
+    overwrite_swap,
+    scratch_dir,
+    sink_overwrite,
+)
 
 
 def merge_upsert(target: DataFrame, staging: DataFrame, keys: list[str]) -> DataFrame:
@@ -89,18 +94,22 @@ def upsert_partitioned(
     partition_col: str,
 ) -> None:
     """Partition-scoped upsert for scale (SURVEY.md §7 M3): with
-    `partitionOverwriteMode=dynamic`, only partitions present in the
-    staging batch are rewritten — merge cost is O(touched partitions),
-    not O(target).
+    `partitionOverwriteMode=dynamic` (a write option — the session
+    conf is left alone), only partitions present in the staging batch
+    are rewritten — merge cost is O(touched partitions), not O(target).
 
     The per-partition merge is still anti∪staging, but the target
     scan is pruned to the staging batch's partition values first.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     parts = [r[0] for r in staging.select(partition_col).distinct().collect()]
     target = spark.read.parquet(target_path).filter(F.col(partition_col).isin(parts))
     merged = merge_upsert(target, staging, keys)
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(target_path)
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(target_path)
+    )
 
 
 # ---------------------------------------------------------------- driver query
@@ -149,7 +158,6 @@ def delete_keys_partitioned(
     dynamically overwrite just them — O(affected partitions), not
     O(target). The key list is read twice (partition discovery +
     anti-join); it is takedown-sized, so both are broadcasts."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     target = spark.read.parquet(target_path)
     affected = [
         r[0]
@@ -165,7 +173,12 @@ def delete_keys_partitioned(
         .join(F.broadcast(keys_df), key, "left_anti")
         .localCheckpoint(eager=True)  # sever lineage before overwrite
     )
-    kept.write.mode("overwrite").partitionBy(partition_col).parquet(target_path)
+    (
+        kept.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(target_path)
+    )
 
 
 @query(
@@ -186,13 +199,9 @@ def sink_delete_keys_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     declarative NOT-IN recompute. Only partitions holding doomed rows
     were rewritten (every status partition qualifies here; the
     partition-pruning behavior itself is pinned in test_upsert)."""
-    import uuid
-
     from gmt_dbt_spark.catalog import table
 
-    REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    run = os.path.join(REPO, ".scratch", f"takedown_{uuid.uuid4().hex[:8]}")
-    try:
+    with scratch_dir("takedown") as run:
         orders = table(spark, sf_dir, "orders")
         orders.write.partitionBy("o_orderstatus").parquet(run)
         doomed = (
@@ -212,11 +221,7 @@ def sink_delete_keys_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("total"),
             )
         )
-        return out.localCheckpoint(eager=True)  # detach from run dir, executor-side
-    finally:
-        import shutil
-
-        shutil.rmtree(run, ignore_errors=True)
+        return out.localCheckpoint(eager=True)
 
 
 @query(

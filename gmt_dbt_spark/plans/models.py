@@ -225,17 +225,17 @@ def compile_model(
     return model
 
 
-def _toposort_levels(
+def _toposort(
     models: dict[str, Model], assume_done: set[str] | None = None
-) -> list[list[Model]]:
-    """Kahn levels: each level's models are mutually independent.
-    Used for cycle detection and for the passes that need a
-    topological order (ephemeral inlining, deferred registration);
-    ``run`` schedules by ready queue instead. ``assume_done`` marks
-    dependencies satisfied OUTSIDE this run (deferred state)."""
+) -> list[Model]:
+    """Topological order, Kahn level by Kahn level. Used for cycle
+    detection and for the passes that need a topological order
+    (ephemeral inlining, deferred registration); ``run`` schedules by
+    ready queue instead. ``assume_done`` marks dependencies satisfied
+    OUTSIDE this run (deferred state)."""
     remaining = dict(models)
     done: set[str] = set(assume_done or ())
-    levels: list[list[Model]] = []
+    order: list[Model] = []
     while remaining:
         ready = [
             m
@@ -245,11 +245,11 @@ def _toposort_levels(
         if not ready:
             cyc = ", ".join(sorted(remaining))
             raise ValueError(f"model DAG has a cycle among: {cyc}")
-        levels.append(ready)
+        order.extend(ready)
         for m in ready:
             done.add(m.name)
             del remaining[m.name]
-    return levels
+    return order
 
 
 class ModelProject:
@@ -288,31 +288,30 @@ class ModelProject:
         lets ephemerals reference other ephemerals; by the time a
         consumer is rewritten, its ephemeral dependencies are already
         fully inlined."""
-        for level in _toposort_levels(self.models):
-            for model in level:
-                ctes = []
-                for dep in model.depends_on:
-                    dm = self.models[dep]
-                    if dm.materialized != "ephemeral":
-                        continue
-                    if model.python_fn is not None:
-                        raise ValueError(
-                            f"python model '{model.name}' cannot ref() "
-                            f"ephemeral model '{dep}' (dbt contract)"
-                        )
-                    cte = f"__cte__{dep}"
-                    model.compiled_sql = re.sub(
-                        rf"\b{re.escape(dep)}\b", cte, model.compiled_sql
+        for model in _toposort(self.models):
+            ctes = []
+            for dep in model.depends_on:
+                dm = self.models[dep]
+                if dm.materialized != "ephemeral":
+                    continue
+                if model.python_fn is not None:
+                    raise ValueError(
+                        f"python model '{model.name}' cannot ref() "
+                        f"ephemeral model '{dep}' (dbt contract)"
                     )
-                    ctes.append(f"{cte} AS ({dm.compiled_sql.strip()})")
-                if ctes:
-                    body = model.compiled_sql.strip()
-                    if body[:5].upper() == "WITH ":
-                        model.compiled_sql = (
-                            "WITH " + ", ".join(ctes) + ", " + body[5:]
-                        )
-                    else:
-                        model.compiled_sql = "WITH " + ", ".join(ctes) + " " + body
+                cte = f"__cte__{dep}"
+                model.compiled_sql = re.sub(
+                    rf"\b{re.escape(dep)}\b", cte, model.compiled_sql
+                )
+                ctes.append(f"{cte} AS ({dm.compiled_sql.strip()})")
+            if ctes:
+                body = model.compiled_sql.strip()
+                if body[:5].upper() == "WITH ":
+                    model.compiled_sql = (
+                        "WITH " + ", ".join(ctes) + ", " + body[5:]
+                    )
+                else:
+                    model.compiled_sql = "WITH " + ", ".join(ctes) + " " + body
 
     @staticmethod
     def _enforce_contract(model: Model, df: DataFrame) -> None:
@@ -496,23 +495,22 @@ class ModelProject:
         the selected descendant's SQL is analyzed. Non-required
         deferred models are best-effort."""
         sub = {n: self.models[n] for n in names}
-        for level in _toposort_levels(sub, set(self.models) - set(sub)):
-            for m in level:
-                path = os.path.join(self.warehouse_dir, m.name)
-                if os.path.exists(path):
-                    self.spark.read.parquet(path).createOrReplaceTempView(m.name)
-                elif m.materialized == "view" and m.compiled_sql:
-                    self.spark.sql(m.compiled_sql).createOrReplaceTempView(m.name)
-                elif m.materialized == "ephemeral":
-                    pass  # already inlined into consumers
-                elif required is not None and m.name in required:
-                    raise RuntimeError(
-                        f"deferred model '{m.name}' (materialized="
-                        f"{m.materialized!r}) has no prior artifact at "
-                        f"{path!r} and no view fallback — run it once "
-                        f"without --defer (or include it in the "
-                        f"selection) before deferring to prior state"
-                    )
+        for m in _toposort(sub, set(self.models) - set(sub)):
+            path = os.path.join(self.warehouse_dir, m.name)
+            if os.path.exists(path):
+                self.spark.read.parquet(path).createOrReplaceTempView(m.name)
+            elif m.materialized == "view" and m.compiled_sql:
+                self.spark.sql(m.compiled_sql).createOrReplaceTempView(m.name)
+            elif m.materialized == "ephemeral":
+                pass  # already inlined into consumers
+            elif required is not None and m.name in required:
+                raise RuntimeError(
+                    f"deferred model '{m.name}' (materialized="
+                    f"{m.materialized!r}) has no prior artifact at "
+                    f"{path!r} and no view fallback — run it once "
+                    f"without --defer (or include it in the "
+                    f"selection) before deferring to prior state"
+                )
 
     def read_warehouse(self, name: str) -> DataFrame:
         """The prior materialized relation of ``name`` from the
@@ -547,7 +545,7 @@ class ModelProject:
                 for n in list(chosen):
                     chosen |= self._ancestors(n)
             models = {k: v for k, v in self.models.items() if k in chosen}
-        order = [m.name for level in _toposort_levels(models, assume_done) for m in level]
+        order = [m.name for m in _toposort(models, assume_done)]
         # Ready queue: a model is submitted once every parent in this
         # run has finished. After the first failure nothing new is
         # submitted; running models finish, then the failure re-raises.

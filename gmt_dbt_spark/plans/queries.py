@@ -18,9 +18,9 @@ from gmt_dbt_spark.catalog import table
 from gmt_dbt_spark.plans import dq
 from gmt_dbt_spark.plans.models import Model, ModelProject
 from gmt_dbt_spark.registry import query
+from gmt_dbt_spark.sources.sinks import SCRATCH, scratch_dir
 
 REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-SCRATCH = os.path.join(REPO, ".scratch")
 
 
 def stg_sources(spark, sf_dir, *tables):
@@ -302,20 +302,15 @@ def model_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys (inserts) plus re-stated %10 keys with doubled totals
     (updates) — the final target must equal the declarative
     recompute, proving MERGE-on-unique_key semantics inside the model
-    DAG. Fresh warehouse per invocation (rerun-safe); the result is
-    detached from the scratch path before cleanup."""
-    import shutil
-    import uuid
-
+    DAG. Fresh warehouse per invocation (rerun-safe)."""
     orders = table(spark, sf_dir, "orders")
     cols = ["o_orderkey", "o_custkey", "o_totalprice"]
-    wh = os.path.join(SCRATCH, f"model_incr_{uuid.uuid4().hex[:8]}")
     model_sql = """
         {{ config(materialized='incremental', unique_key='o_orderkey') }}
         SELECT o_orderkey, o_custkey, o_totalprice
         FROM {{ source('stg', 'orders_batch') }}
         """
-    try:
+    with scratch_dir("model_incr") as wh:
         sources = {("stg", "orders_batch"): "stg_orders_batch"}
         # run 1: even keys, original values
         orders.filter(F.col("o_orderkey") % 2 == 0).select(
@@ -335,9 +330,7 @@ def model_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = ModelProject(
             spark, [Model("incr_orders", model_sql)], sources, warehouse_dir=wh
         ).run()["incr_orders"]
-        return out.localCheckpoint(eager=True)  # detach from wh, executor-side
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
+        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -468,9 +461,6 @@ def pipeline_reference_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     What took the reference a GCS bucket, two BigQuery datasets and
     a dbt invocation is one lazy Spark DAG: ingest scans feed the
     CTAS writes, which feed the mart — each stage distributed."""
-    import shutil
-    import uuid
-
     from gmt_dbt_spark.sources.readers import scan_json
     from gmt_dbt_spark.sources.sanitize import sanitize_columns
 
@@ -481,7 +471,6 @@ def pipeline_reference_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         sanitize_columns(scan_json(spark, os.path.join(fx, name))).createOrReplaceTempView(view)
 
-    wh = os.path.join(SCRATCH, f"ref_e2e_{uuid.uuid4().hex[:8]}")
     models = [
         Model(
             "bronze_business",
@@ -521,13 +510,11 @@ def pipeline_reference_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("stg", "yelp_business"): "stg_yelp_business",
         ("stg", "yelp_tip"): "stg_yelp_tip",
     }
-    try:
+    with scratch_dir("ref_e2e") as wh:
         out = ModelProject(
             spark, models, sources, warehouse_dir=wh, threads=4
         ).run()["mart_city_stats"]
-        return out.localCheckpoint(eager=True)  # detach from scratch wh, executor-side
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
+        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -697,20 +684,10 @@ def model_python(spark: SparkSession, sf_dir: str) -> DataFrame:
             """,
         ),
     ]
-    project = ModelProject(
-        spark,
-        models,
-        sources,
-        warehouse_dir=os.path.join(SCRATCH, f"model_py_{os.getpid()}"),
-        threads=4,
-    )
-    try:
+    with scratch_dir("model_py") as wh:
+        project = ModelProject(spark, models, sources, warehouse_dir=wh, threads=4)
         out = project.run()["mart_from_python"]
-        return out.localCheckpoint(eager=True)  # detach from scratch wh, executor-side
-    finally:
-        import shutil
-
-        shutil.rmtree(os.path.join(SCRATCH, f"model_py_{os.getpid()}"), ignore_errors=True)
+        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -749,21 +726,12 @@ def model_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_price": "double",
         },
     )
-    project = ModelProject(
-        spark,
-        [m],
-        {("stg", "orders"): "stg_orders"},
-        warehouse_dir=os.path.join(SCRATCH, f"model_contract_{os.getpid()}"),
-    )
-    try:
-        out = project.run()["priority_rollup"]
-        return out.localCheckpoint(eager=True)  # detach from scratch wh, executor-side
-    finally:
-        import shutil
-
-        shutil.rmtree(
-            os.path.join(SCRATCH, f"model_contract_{os.getpid()}"), ignore_errors=True
+    with scratch_dir("model_contract") as wh:
+        project = ModelProject(
+            spark, [m], {("stg", "orders"): "stg_orders"}, warehouse_dir=wh
         )
+        out = project.run()["priority_rollup"]
+        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -789,19 +757,11 @@ def model_dir_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stg_sources(spark, sf_dir, "orders", "customer")
     models, sources = load_models_dir(os.path.join(REPO, "fixtures", "models"))
-    project = ModelProject(
-        spark,
-        models,
-        sources,
-        warehouse_dir=os.path.join(SCRATCH, f"model_dir_{os.getpid()}"),
-    )
-    try:
-        out = project.run()["mart_segment_sales_f"]
-        return out.localCheckpoint(eager=True)  # detach from scratch wh, executor-side
-    finally:
-        import shutil
-
-        shutil.rmtree(os.path.join(SCRATCH, f"model_dir_{os.getpid()}"), ignore_errors=True)
+    with scratch_dir("model_dir") as wh:
+        out = ModelProject(spark, models, sources, warehouse_dir=wh).run()[
+            "mart_segment_sales_f"
+        ]
+        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -872,7 +832,8 @@ def model_unit_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ],
         {("stg", "orders"): "unit_mock_orders"},
-        warehouse_dir=os.path.join(SCRATCH, f"unit_test_wh_{os.getpid()}"),
+        # a view-only project never writes its warehouse
+        warehouse_dir=os.path.join(SCRATCH, "unit_test_wh"),
     )
     actual = project.run()["status_rollup_under_test"]
     expected = spark.createDataFrame(

@@ -137,44 +137,3 @@ def scoped_conf(spark, **kv):
                     pass
             else:
                 spark.conf.set(k, v)
-
-
-def replay_conf(spark):
-    """Conf scope for the bounded micro-batch replay harnesses
-    (streaming/stateful.py): 8 state partitions instead of the
-    session's shuffle-partition count.
-
-    Every stateful streaming micro-batch pays a state-store
-    open/commit per STATE PARTITION per batch, and the replays run
-    4-6 micro-batches over fixture-scale data — at the session's 32
-    (or the vanilla driver's 200) partitions that fixed machinery
-    dominates wall-clock (measured: the two outer stream-stream
-    replays drop 22.1→14.7 s / 15.6→7.8 s at sf0.1 going 32→8).
-    State-partition count is a deployment knob sized to throughput —
-    a LIVE deployment of these same DAGs wants it high (it is the
-    unit of state parallelism and cannot change under one
-    checkpoint); a bounded replay of a small fixture wants it small.
-    The production plan is unchanged — only the harness execution
-    scope.
-
-    noDataMicroBatches is pinned TRUE (its Spark default) because the
-    r11 single-sentinel replays RELY on it: the engine's final
-    no-data batch is what applies the last watermark advance and
-    flushes expired state/timers — a deployment that had disabled it
-    globally would silently drop the flush, so the replay scope makes
-    the dependency explicit.
-
-    r11: the replay partition count is a CONF
-    (spark.gmt_dbt.replay_state_partitions, default 8) rather than a
-    literal — the deployment knob the docstring above describes is
-    now actually settable without editing code, in both directions
-    (a live deployment raises it; a bounded fixture replay can lower
-    it further)."""
-    n = spark.conf.get("spark.gmt_dbt.replay_state_partitions", "8")
-    return scoped_conf(
-        spark,
-        **{
-            "spark.sql.shuffle.partitions": str(int(n)),
-            "spark.sql.streaming.noDataMicroBatches.enabled": "true",
-        },
-    )

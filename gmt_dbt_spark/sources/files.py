@@ -22,10 +22,10 @@ from pyspark.sql import functions as F
 
 from gmt_dbt_spark.catalog import table
 from gmt_dbt_spark.registry import query
+from gmt_dbt_spark.sources.sinks import SCRATCH
 
 REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _BLOBS = os.path.join(REPO, "fixtures", "blobs")
-SCRATCH = os.path.join(REPO, ".scratch")
 
 
 @query(

@@ -6,7 +6,7 @@ exercised for real, but every output column carries an explicit cast
 on BOTH sides so the hash compare is over pinned types, not over the
 two engines' inference guesses.
 
-Sink queries write under .scratch/ (gitignored) and return the
+Sink queries write under SCRATCH (gitignored) and return the
 read-back; their oracles recompute from the source fixtures, so the
 check also proves the write→read round-trip is lossless.
 """
@@ -21,11 +21,16 @@ from pyspark.sql import functions as F
 from gmt_dbt_spark.registry import query
 from gmt_dbt_spark.sources.readers import scan_csv, scan_json, schema_from_json_file
 from gmt_dbt_spark.sources.sanitize import sanitize_columns
-from gmt_dbt_spark.sources.sinks import StagingTable, sink_ctas, sink_overwrite
+from gmt_dbt_spark.sources.sinks import (
+    SCRATCH,
+    StagingTable,
+    scratch_dir,
+    sink_ctas,
+    sink_overwrite,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 FIXTURES = os.path.join(REPO, "fixtures")
-SCRATCH = os.path.join(REPO, ".scratch")
 
 
 def _fx(name: str) -> str:
@@ -452,7 +457,7 @@ def scan_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("l_partkey").alias("min_pkey"),
             F.max("l_partkey").alias("max_pkey"),
         )
-        return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
+        return out.localCheckpoint(eager=True)  # run inside the conf scope
 
 
 @query(
@@ -478,11 +483,7 @@ def scan_json_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant, fields extracted with variant_get, rolled up per type,
     hash-matched against DuckDB's json_extract over the original
     table."""
-    import shutil
-    import uuid
-
-    path = os.path.join(SCRATCH, f"variant_events_{uuid.uuid4().hex[:8]}")
-    try:
+    with scratch_dir("variant_events") as path:
         from gmt_dbt_spark.catalog import table
 
         ev = (
@@ -506,7 +507,5 @@ def scan_json_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n"), F.sum("k").alias("k_sum"))
         )
-        return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+        return out.localCheckpoint(eager=True)
 

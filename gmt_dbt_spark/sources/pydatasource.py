@@ -28,6 +28,7 @@ from pyspark.sql.datasource import (
 )
 
 from gmt_dbt_spark.registry import query
+from gmt_dbt_spark.sources.sinks import scratch_dir
 
 
 class SyntheticEventsDataSource(DataSource):
@@ -200,16 +201,12 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     this proves pluggable WRITE — together they wrap any external
     system as a first-class distributed source/sink."""
     import os
-    import shutil
-    import uuid
 
     from gmt_dbt_spark.catalog import table
 
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    path = os.path.join(repo, ".scratch", f"pyds_sink_{uuid.uuid4().hex[:8]}")
     cols = ["o_orderkey", "o_custkey", "o_orderstatus"]
     spark.dataSource.register(NdjsonDirDataSource)
-    try:
+    with scratch_dir("pyds_sink") as path:
         (
             table(spark, sf_dir, "orders")
             .filter(F.col("o_orderkey") % 150 == 0)
@@ -220,9 +217,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             .save()
         )
         out = spark.read.json(os.path.join(path, "*.json")).select(*cols)
-        return out.localCheckpoint(eager=True)  # detach, executor-side
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+        return out.localCheckpoint(eager=True)
 
 
 class BoundedTicksDataSource(DataSource):

@@ -11,7 +11,9 @@ bronze dbt models (CTAS copy into a bronze layer — the models' own
 embedded DDL is a reference bug, SURVEY.md §3.2); `StagingTable` is
 the `<table>_temp` create-merge-drop lifecycle
 (`gcp_function.py:159-164`, drop at `:112`); `overwrite_swap` is the
-read-modify-write of a target in place (MERGE rewrites).
+read-modify-write of a target in place (MERGE rewrites);
+`scratch_dir` is the per-call scratch directory every builder that
+round-trips through storage works in.
 """
 
 from __future__ import annotations
@@ -19,8 +21,13 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+
+REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+SCRATCH = os.path.join(REPO, ".scratch")
 
 
 def sink_overwrite(
@@ -74,3 +81,21 @@ class StagingTable:
 
     def __exit__(self, *exc) -> None:
         shutil.rmtree(self.path, ignore_errors=True)
+
+
+@contextmanager
+def scratch_dir(prefix: str) -> Iterator[str]:
+    """Yield a fresh ``SCRATCH/<prefix>_<uuid8>`` path and remove it on
+    exit, success or error. The path is NOT created: a caller may
+    write straight to it in ``errorifexists`` mode.
+
+    A DataFrame that reads the directory is invalid once the block
+    ends, so a builder returning one detaches it first with an eager
+    ``localCheckpoint`` — executor-side: the partitions materialize on
+    the executors, the lineage to the scratch files is cut and nothing
+    lands on the driver."""
+    path = os.path.join(SCRATCH, f"{prefix}_{uuid.uuid4().hex[:8]}")
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)

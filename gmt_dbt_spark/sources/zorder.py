@@ -84,9 +84,7 @@ from pyspark.sql import SparkSession  # noqa: E402
 
 from gmt_dbt_spark.catalog import table  # noqa: E402
 from gmt_dbt_spark.registry import query  # noqa: E402
-
-REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-SCRATCH = os.path.join(REPO, ".scratch")
+from gmt_dbt_spark.sources.sinks import SCRATCH  # noqa: E402
 
 
 @query(

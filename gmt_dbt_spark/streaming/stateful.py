@@ -58,11 +58,8 @@ from gmt_dbt_spark.catalog import table
 from gmt_dbt_spark.exprs import dsum
 from gmt_dbt_spark.operators.upsert import merge_upsert
 from gmt_dbt_spark.registry import query
-from gmt_dbt_spark.session import replay_conf
-from gmt_dbt_spark.sources.sinks import overwrite_swap
-
-REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-SCRATCH = os.path.join(REPO, ".scratch")
+from gmt_dbt_spark.session import scoped_conf
+from gmt_dbt_spark.sources.sinks import SCRATCH, overwrite_swap, scratch_dir
 
 EVENT_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
@@ -96,16 +93,40 @@ def sentinel_times(ev, delay_days: int, margin_days: int = 2):
     return s1.strftime(fmt), s2.strftime(fmt)
 
 
+# State partitions for the bounded replays. Every stateful streaming
+# micro-batch pays a state-store open/commit per STATE PARTITION per
+# batch, and the replays run a few micro-batches over fixture-scale
+# data — at the session's 32 (or the vanilla driver's 200) partitions
+# that fixed machinery dominates wall-clock (measured: the two outer
+# stream-stream replays drop 22.1→14.7 s / 15.6→7.8 s at sf0.1 going
+# 32→8). A LIVE deployment of these same DAGs wants the count high (it
+# is the unit of state parallelism and cannot change under one
+# checkpoint); only the harness execution scope uses this one.
+REPLAY_STATE_PARTITIONS = 8
+
+
 def run_replay(df: DataFrame, ckpt: str, *, mode: str, name: str | None = None,
                foreach=None) -> None:
-    """Execute one bounded availableNow replay to completion under
-    `replay_conf` (8 state partitions — see session.replay_conf for
-    the measured rationale). Sink is the named memory table unless a
-    `foreach` batch function is given. ONE definition for the
-    conf-scope + trigger + await dance every replay harness repeats
-    (review pass — seven hand-rolled copies before)."""
+    """Execute one bounded availableNow replay to completion with
+    REPLAY_STATE_PARTITIONS state partitions. Sink is the named memory
+    table unless a `foreach` batch function is given. ONE definition
+    for the conf-scope + trigger + await dance every replay harness
+    repeats (review pass — seven hand-rolled copies before).
+
+    noDataMicroBatches is pinned TRUE (its Spark default) because the
+    r11 single-sentinel replays RELY on it: the engine's final no-data
+    batch is what applies the last watermark advance and flushes
+    expired state/timers — a deployment that had disabled it globally
+    would silently drop the flush, so the replay scope makes the
+    dependency explicit."""
     spark = df.sparkSession
-    with replay_conf(spark):
+    with scoped_conf(
+        spark,
+        **{
+            "spark.sql.shuffle.partitions": str(REPLAY_STATE_PARTITIONS),
+            "spark.sql.streaming.noDataMicroBatches.enabled": "true",
+        },
+    ):
         w = df.writeStream.outputMode(mode)
         if foreach is not None:
             w = w.foreachBatch(foreach)
@@ -220,7 +241,7 @@ def write_replay(
     micro-batch of state machinery (~1.3-1.7 s per batch in these
     replays). The advanced watermark's flush then happens in the
     engine's final NO-DATA batch (noDataMicroBatches, pinned true in
-    replay_conf). The tail is part of the cache key: the same frame
+    run_replay). The tail is part of the cache key: the same frame
     with different (or no) sentinels must never collide.
 
     CACHED when ``sf_dir`` is given (r3 perf pass): authoring rows
@@ -501,25 +522,24 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user running totals maintained in the state store across
     micro-batches; the last emitted update per user must equal the
     full-input aggregate no matter how the input was micro-batched."""
-    run_dir = os.path.join(SCRATCH, f"stream_state_{uuid.uuid4().hex[:8]}")
-    src_dir = os.path.join(run_dir, "src")
-    ckpt = os.path.join(run_dir, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
     name = f"state_t_{uuid.uuid4().hex[:8]}"
     try:
-        ev = table(spark, sf_dir, "events")
-        write_replay(ev, src_dir, sf_dir=sf_dir)
-        stream = (
-            spark.readStream.schema(EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .json(src_dir)
-        )
-        run_replay(running_totals_stateful(stream), ckpt, mode="update", name=name)
-        # bounded replay-harness readback (module docstring contract)
-        final = _final_update_per_user(spark, name, "last_ts")
-        return spark.createDataFrame(final, STATE_OUT_SCHEMA)
+        with scratch_dir("stream_state") as run_dir:
+            src_dir = os.path.join(run_dir, "src")
+            ckpt = os.path.join(run_dir, "ckpt")
+            os.makedirs(src_dir, exist_ok=True)
+            ev = table(spark, sf_dir, "events")
+            write_replay(ev, src_dir, sf_dir=sf_dir)
+            stream = (
+                spark.readStream.schema(EVENT_SCHEMA)
+                .option("maxFilesPerTrigger", 1)
+                .json(src_dir)
+            )
+            run_replay(running_totals_stateful(stream), ckpt, mode="update", name=name)
+            # bounded replay-harness readback (module docstring contract)
+            final = _final_update_per_user(spark, name, "last_ts")
+            return spark.createDataFrame(final, STATE_OUT_SCHEMA)
     finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
         spark.catalog.dropTempView(name)
 
 
@@ -540,12 +560,11 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Complete-mode aggregation means the LAST batch's state equals the
     full-input aggregate, so the final target is deterministic no
     matter how the source was micro-batched."""
-    run_dir = os.path.join(SCRATCH, f"stream_upsert_{uuid.uuid4().hex[:8]}")
-    src_dir = os.path.join(run_dir, "src")
-    target_path = os.path.join(run_dir, "target")
-    ckpt = os.path.join(run_dir, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    try:
+    with scratch_dir("stream_upsert") as run_dir:
+        src_dir = os.path.join(run_dir, "src")
+        target_path = os.path.join(run_dir, "target")
+        ckpt = os.path.join(run_dir, "ckpt")
+        os.makedirs(src_dir, exist_ok=True)
         # NULL upsert keys are excluded up front (r3 adversarial
         # finding): MERGE ON t.user_id = s.user_id follows SQL
         # equality — a NULL source key matches nothing and would
@@ -577,10 +596,8 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         run_replay(agg, ckpt, mode="complete", foreach=upsert_batch)
         final = spark.read.parquet(target_path)
-        final = final.localCheckpoint(eager=True)  # detach from path, executor-side
+        final = final.localCheckpoint(eager=True)
         return final
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
 
 
 def tws_available() -> bool:
@@ -674,10 +691,6 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not tws_available():
         return stream_custom_state(spark, sf_dir)
 
-    run_dir = os.path.join(SCRATCH, f"stream_tws_{uuid.uuid4().hex[:8]}")
-    src_dir = os.path.join(run_dir, "src")
-    ckpt = os.path.join(run_dir, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
     name = f"tws_t_{uuid.uuid4().hex[:8]}"
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     try:
@@ -685,27 +698,31 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
-        ev = table(spark, sf_dir, "events")
-        write_replay(ev, src_dir, sf_dir=sf_dir)
-        stream = (
-            spark.readStream.schema(EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .json(src_dir)
-        )
-        out = stream.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=RunningTotalsProcessor.build(),
-            outputStructType="user_id bigint, n_events bigint, total double, last_us bigint",
-            outputMode="Update",
-            timeMode="None",
-        )
-        run_replay(out, ckpt, mode="update", name=name)
-        # bounded replay-harness readback (module docstring contract)
-        final = _final_update_per_user(spark, name, "last_us")
-        rows = [
-            (u, n, t, pd.Timestamp(us, unit="us").to_pydatetime())
-            for (u, n, t, us) in final
-        ]
-        return spark.createDataFrame(rows, STATE_OUT_SCHEMA)
+        with scratch_dir("stream_tws") as run_dir:
+            src_dir = os.path.join(run_dir, "src")
+            ckpt = os.path.join(run_dir, "ckpt")
+            os.makedirs(src_dir, exist_ok=True)
+            ev = table(spark, sf_dir, "events")
+            write_replay(ev, src_dir, sf_dir=sf_dir)
+            stream = (
+                spark.readStream.schema(EVENT_SCHEMA)
+                .option("maxFilesPerTrigger", 1)
+                .json(src_dir)
+            )
+            out = stream.groupBy("user_id").transformWithStateInPandas(
+                statefulProcessor=RunningTotalsProcessor.build(),
+                outputStructType="user_id bigint, n_events bigint, total double, last_us bigint",
+                outputMode="Update",
+                timeMode="None",
+            )
+            run_replay(out, ckpt, mode="update", name=name)
+            # bounded replay-harness readback (module docstring contract)
+            final = _final_update_per_user(spark, name, "last_us")
+            rows = [
+                (u, n, t, pd.Timestamp(us, unit="us").to_pydatetime())
+                for (u, n, t, us) in final
+            ]
+            return spark.createDataFrame(rows, STATE_OUT_SCHEMA)
     finally:
         if prev is not None:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
@@ -714,7 +731,6 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
             except Exception:
                 pass
-        shutil.rmtree(run_dir, ignore_errors=True)
         try:
             spark.catalog.dropTempView(name)
         except Exception:
@@ -743,49 +759,48 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     match is ever evicted mid-replay and the result equals the batch
     interval join exactly; production tunes the delay to actual
     lateness (same code, smaller state)."""
-    run_dir = os.path.join(SCRATCH, f"stream_ssj_{uuid.uuid4().hex[:8]}")
-    src_dir = os.path.join(run_dir, "src")
-    ckpt = os.path.join(run_dir, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
     name = f"ssj_t_{uuid.uuid4().hex[:8]}"
     try:
-        ev = table(spark, sf_dir, "events")
-        write_replay(ev, src_dir, sf_dir=sf_dir)
-        stream = (
-            spark.readStream.schema(EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .json(src_dir)
-        )
-        clicks = (
-            stream.filter(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("c_ts"),
+        with scratch_dir("stream_ssj") as run_dir:
+            src_dir = os.path.join(run_dir, "src")
+            ckpt = os.path.join(run_dir, "ckpt")
+            os.makedirs(src_dir, exist_ok=True)
+            ev = table(spark, sf_dir, "events")
+            write_replay(ev, src_dir, sf_dir=sf_dir)
+            stream = (
+                spark.readStream.schema(EVENT_SCHEMA)
+                .option("maxFilesPerTrigger", 1)
+                .json(src_dir)
             )
-            .withWatermark("c_ts", "40 days")
-        )
-        purchases = (
-            stream.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
+            clicks = (
+                stream.filter(F.col("event_type") == "click")
+                .select(
+                    F.col("event_id").alias("click_id"),
+                    F.col("user_id").alias("c_user"),
+                    F.col("ts").alias("c_ts"),
+                )
+                .withWatermark("c_ts", "40 days")
             )
-            .withWatermark("p_ts", "40 days")
-        )
-        joined = clicks.join(
-            purchases,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("p_ts") > F.col("c_ts"))
-            & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 60 MINUTES")),
-            "inner",
-        ).select("click_id", "purchase_id")
-        run_replay(joined, ckpt, mode="append", name=name)
-        out = spark.table(name).distinct()  # join emits each match once; defensive
-        return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
+            purchases = (
+                stream.filter(F.col("event_type") == "purchase")
+                .select(
+                    F.col("event_id").alias("purchase_id"),
+                    F.col("user_id").alias("p_user"),
+                    F.col("ts").alias("p_ts"),
+                )
+                .withWatermark("p_ts", "40 days")
+            )
+            joined = clicks.join(
+                purchases,
+                (F.col("c_user") == F.col("p_user"))
+                & (F.col("p_ts") > F.col("c_ts"))
+                & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 60 MINUTES")),
+                "inner",
+            ).select("click_id", "purchase_id")
+            run_replay(joined, ckpt, mode="append", name=name)
+            out = spark.table(name).distinct()  # join emits each match once; defensive
+            return out.localCheckpoint(eager=True)
     finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
         try:
             spark.catalog.dropTempView(name)
         except Exception:
@@ -814,33 +829,32 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch. Complete-mode aggregation makes the final memory-sink
     table the totals over all batches, which must equal the batch
     join+rollup the oracle runs."""
-    run_dir = os.path.join(SCRATCH, f"stream_ssj2_{uuid.uuid4().hex[:8]}")
-    src_dir = os.path.join(run_dir, "src")
-    ckpt = os.path.join(run_dir, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
     name = f"ssj2_t_{uuid.uuid4().hex[:8]}"
     try:
-        ev = table(spark, sf_dir, "events")
-        write_replay(ev, src_dir, sf_dir=sf_dir)
-        stream = (
-            spark.readStream.schema(EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .json(src_dir)
-        )
-        dim = table(spark, sf_dir, "customer").select(
-            F.col("c_custkey").alias("user_id"), "c_mktsegment"
-        )
-        agg = (
-            stream.filter(F.col("event_type").isin("click", "purchase"))
-            .join(dim, "user_id")  # static side: per-batch hash build
-            .groupBy("c_mktsegment", "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        run_replay(agg, ckpt, mode="complete", name=name)
-        out = spark.table(name)
-        return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
+        with scratch_dir("stream_ssj2") as run_dir:
+            src_dir = os.path.join(run_dir, "src")
+            ckpt = os.path.join(run_dir, "ckpt")
+            os.makedirs(src_dir, exist_ok=True)
+            ev = table(spark, sf_dir, "events")
+            write_replay(ev, src_dir, sf_dir=sf_dir)
+            stream = (
+                spark.readStream.schema(EVENT_SCHEMA)
+                .option("maxFilesPerTrigger", 1)
+                .json(src_dir)
+            )
+            dim = table(spark, sf_dir, "customer").select(
+                F.col("c_custkey").alias("user_id"), "c_mktsegment"
+            )
+            agg = (
+                stream.filter(F.col("event_type").isin("click", "purchase"))
+                .join(dim, "user_id")  # static side: per-batch hash build
+                .groupBy("c_mktsegment", "event_type")
+                .agg(F.count(F.lit(1)).alias("n"))
+            )
+            run_replay(agg, ckpt, mode="complete", name=name)
+            out = spark.table(name)
+            return out.localCheckpoint(eager=True)
     finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
         try:
             spark.catalog.dropTempView(name)
         except Exception:
@@ -885,78 +899,77 @@ def _stream_stream_outer_replay(
     """Shared bounded-replay harness for watermark-dependent outer
     stream-stream joins (see stream_stream_left_outer docstring for
     the sentinel mechanism)."""
-    run_dir = os.path.join(SCRATCH, f"stream_sslo_{uuid.uuid4().hex[:8]}")
-    src_dir = os.path.join(run_dir, "src")
-    ckpt = os.path.join(run_dir, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
     name = f"sslo_t_{uuid.uuid4().hex[:8]}"
     try:
-        ev = table(spark, sf_dir, "events")
-        # Sentinels: one per side-filter so BOTH input streams see
-        # their watermark advance; distinct reserved users so they can
-        # never join each other or real rows; timestamps DERIVED from
-        # max(ts) so the mechanism survives any fixture time span.
-        #
-        # r11 (VERDICT r10 item 3), two batch cuts with IDENTICAL
-        # output (verified 1-vs-2 epochs at sf0.01; the oracle hash
-        # pins every sf): (a) the second "emit" sentinel epoch is
-        # gone — the engine's final NO-DATA micro-batch
-        # (noDataMicroBatches, pinned true in replay_conf) applies
-        # the watermark s1 advanced and flushes the expired
-        # outer-join state; (b) the remaining sentinel pair rides IN
-        # the last data shard (write_replay's tail) instead of its
-        # own file — it only needs to arrive with the final real
-        # rows. Micro-batches 4 → 2 (+ the no-data flush).
-        s1, _ = sentinel_times(ev, delay_days=40)
-        write_replay(
-            ev,
-            src_dir,
-            sf_dir=sf_dir,
-            tail=[(-1, -999999, s1, "click"), (-2, -999998, s1, "purchase")],
-        )
-        pin_mtimes(src_dir)
-        stream = (
-            spark.readStream.schema(EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .json(src_dir)
-        )
-        clicks = (
-            stream.filter(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("c_ts"),
+        with scratch_dir("stream_sslo") as run_dir:
+            src_dir = os.path.join(run_dir, "src")
+            ckpt = os.path.join(run_dir, "ckpt")
+            os.makedirs(src_dir, exist_ok=True)
+            ev = table(spark, sf_dir, "events")
+            # Sentinels: one per side-filter so BOTH input streams see
+            # their watermark advance; distinct reserved users so they can
+            # never join each other or real rows; timestamps DERIVED from
+            # max(ts) so the mechanism survives any fixture time span.
+            #
+            # r11 (VERDICT r10 item 3), two batch cuts with IDENTICAL
+            # output (verified 1-vs-2 epochs at sf0.01; the oracle hash
+            # pins every sf): (a) the second "emit" sentinel epoch is
+            # gone — the engine's final NO-DATA micro-batch
+            # (noDataMicroBatches, pinned true in run_replay) applies
+            # the watermark s1 advanced and flushes the expired
+            # outer-join state; (b) the remaining sentinel pair rides IN
+            # the last data shard (write_replay's tail) instead of its
+            # own file — it only needs to arrive with the final real
+            # rows. Micro-batches 4 → 2 (+ the no-data flush).
+            s1, _ = sentinel_times(ev, delay_days=40)
+            write_replay(
+                ev,
+                src_dir,
+                sf_dir=sf_dir,
+                tail=[(-1, -999999, s1, "click"), (-2, -999998, s1, "purchase")],
             )
-            .withWatermark("c_ts", "40 days")
-        )
-        purchases = (
-            stream.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
+            pin_mtimes(src_dir)
+            stream = (
+                spark.readStream.schema(EVENT_SCHEMA)
+                .option("maxFilesPerTrigger", 1)
+                .json(src_dir)
             )
-            .withWatermark("p_ts", "40 days")
-        )
-        joined = clicks.join(
-            purchases,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("p_ts") > F.col("c_ts"))
-            & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 60 MINUTES")),
-            how,
-        ).select("click_id", "purchase_id")
-        run_replay(joined, ckpt, mode="append", name=name)
-        out = (
-            spark.table(name)
-            .filter(
-                (F.col("click_id").isNull() | (F.col("click_id") >= 0))
-                & (F.col("purchase_id").isNull() | (F.col("purchase_id") >= 0))
+            clicks = (
+                stream.filter(F.col("event_type") == "click")
+                .select(
+                    F.col("event_id").alias("click_id"),
+                    F.col("user_id").alias("c_user"),
+                    F.col("ts").alias("c_ts"),
+                )
+                .withWatermark("c_ts", "40 days")
             )
-            .distinct()
-        )
-        return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
+            purchases = (
+                stream.filter(F.col("event_type") == "purchase")
+                .select(
+                    F.col("event_id").alias("purchase_id"),
+                    F.col("user_id").alias("p_user"),
+                    F.col("ts").alias("p_ts"),
+                )
+                .withWatermark("p_ts", "40 days")
+            )
+            joined = clicks.join(
+                purchases,
+                (F.col("c_user") == F.col("p_user"))
+                & (F.col("p_ts") > F.col("c_ts"))
+                & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 60 MINUTES")),
+                how,
+            ).select("click_id", "purchase_id")
+            run_replay(joined, ckpt, mode="append", name=name)
+            out = (
+                spark.table(name)
+                .filter(
+                    (F.col("click_id").isNull() | (F.col("click_id") >= 0))
+                    & (F.col("purchase_id").isNull() | (F.col("purchase_id") >= 0))
+                )
+                .distinct()
+            )
+            return out.localCheckpoint(eager=True)
     finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
         try:
             spark.catalog.dropTempView(name)
         except Exception:
@@ -1154,62 +1167,61 @@ def stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    run_dir = os.path.join(SCRATCH, f"stream_sesto_{uuid.uuid4().hex[:8]}")
-    src_dir = os.path.join(run_dir, "src")
-    ckpt = os.path.join(run_dir, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
     name = f"sesto_t_{uuid.uuid4().hex[:8]}"
     try:
-        ev = table(spark, sf_dir, "events")
-        # time-split replay at the DATA-DERIVED midpoint: single-pass
-        # gap state needs cross-batch event-time order, and a
-        # calendar-based split (day-of-month) would interleave months
-        # if the fixture's span ever grows (review finding).
-        # r11 (VERDICT r10 item 3), two batch cuts with IDENTICAL
-        # output (verified 1-vs-2 sentinels at sf0.01; the oracle
-        # hash pins every sf): (a) the second sentinel batch is gone
-        # — s1 advances the watermark past every real session's
-        # expiry and the engine's final NO-DATA micro-batch
-        # (noDataMicroBatches, pinned true in replay_conf) fires the
-        # expired timers, which is all the old "flush" batch did;
-        # (b) the remaining sentinel rides IN the second time-half
-        # shard (write_replay's tail) — it is the newest event by
-        # construction, so event-time order within the batch is
-        # preserved and the sentinel user is its own state group.
-        # Micro-batches 4 → 2 (+ the no-data flush).
-        s1, _ = sentinel_times(ev, delay_days=40)
-        write_replay(
-            ev,
-            src_dir,
-            sf_dir=sf_dir,
-            split="mid",
-            tail=[(-1, -999999, s1, "click")],
-        )
-        pin_mtimes(src_dir)
-        stream = (
-            spark.readStream.schema(EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .json(src_dir)
-            .withWatermark("ts", "40 days")
-        )
-        sessions = stream.groupBy("user_id").applyInPandasWithState(
-            update,
-            outputStructType=SESSION_OUT_SCHEMA,
-            stateStructType="start_us bigint, last_us bigint, n bigint",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-        run_replay(sessions, ckpt, mode="append", name=name)
-        # sentinel sessions carry user_id -999999/-999998; real NULL
-        # users must SURVIVE this cut (null >= 0 is null -> dropped by
-        # the bare comparison — r3 adversarial finding; the oracle's
-        # gaps-and-islands sessionizes the null user like any other)
-        out = spark.table(name).filter(
-            F.col("user_id").isNull() | (F.col("user_id") >= 0)
-        )
-        return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
+        with scratch_dir("stream_sesto") as run_dir:
+            src_dir = os.path.join(run_dir, "src")
+            ckpt = os.path.join(run_dir, "ckpt")
+            os.makedirs(src_dir, exist_ok=True)
+            ev = table(spark, sf_dir, "events")
+            # time-split replay at the DATA-DERIVED midpoint: single-pass
+            # gap state needs cross-batch event-time order, and a
+            # calendar-based split (day-of-month) would interleave months
+            # if the fixture's span ever grows (review finding).
+            # r11 (VERDICT r10 item 3), two batch cuts with IDENTICAL
+            # output (verified 1-vs-2 sentinels at sf0.01; the oracle
+            # hash pins every sf): (a) the second sentinel batch is gone
+            # — s1 advances the watermark past every real session's
+            # expiry and the engine's final NO-DATA micro-batch
+            # (noDataMicroBatches, pinned true in run_replay) fires the
+            # expired timers, which is all the old "flush" batch did;
+            # (b) the remaining sentinel rides IN the second time-half
+            # shard (write_replay's tail) — it is the newest event by
+            # construction, so event-time order within the batch is
+            # preserved and the sentinel user is its own state group.
+            # Micro-batches 4 → 2 (+ the no-data flush).
+            s1, _ = sentinel_times(ev, delay_days=40)
+            write_replay(
+                ev,
+                src_dir,
+                sf_dir=sf_dir,
+                split="mid",
+                tail=[(-1, -999999, s1, "click")],
+            )
+            pin_mtimes(src_dir)
+            stream = (
+                spark.readStream.schema(EVENT_SCHEMA)
+                .option("maxFilesPerTrigger", 1)
+                .json(src_dir)
+                .withWatermark("ts", "40 days")
+            )
+            sessions = stream.groupBy("user_id").applyInPandasWithState(
+                update,
+                outputStructType=SESSION_OUT_SCHEMA,
+                stateStructType="start_us bigint, last_us bigint, n bigint",
+                outputMode="append",
+                timeoutConf=GroupStateTimeout.EventTimeTimeout,
+            )
+            run_replay(sessions, ckpt, mode="append", name=name)
+            # sentinel sessions carry user_id -999999/-999998; real NULL
+            # users must SURVIVE this cut (null >= 0 is null -> dropped by
+            # the bare comparison — r3 adversarial finding; the oracle's
+            # gaps-and-islands sessionizes the null user like any other)
+            out = spark.table(name).filter(
+                F.col("user_id").isNull() | (F.col("user_id") >= 0)
+            )
+            return out.localCheckpoint(eager=True)
     finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
         try:
             spark.catalog.dropTempView(name)
         except Exception:
@@ -1270,12 +1282,11 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmt_dbt_spark.operators.curation import MIN_CHARS, MIN_TOKENS
     from gmt_dbt_spark.operators.dedup import tokens_col
 
-    run_dir = os.path.join(SCRATCH, f"stream_ingest_{uuid.uuid4().hex[:8]}")
-    src_dir = os.path.join(run_dir, "src")
-    store = os.path.join(run_dir, "store")
-    ckpt = os.path.join(run_dir, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    try:
+    with scratch_dir("stream_ingest") as run_dir:
+        src_dir = os.path.join(run_dir, "src")
+        store = os.path.join(run_dir, "store")
+        ckpt = os.path.join(run_dir, "ckpt")
+        os.makedirs(src_dir, exist_ok=True)
         docs = (
             table(spark, sf_dir, "documents")
             .select("doc_id", "text", "source")
@@ -1326,9 +1337,7 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         run_replay(stream, ckpt, mode="append", foreach=ingest)
         final = spark.read.parquet(store)
-        return final.localCheckpoint(eager=True)  # detach from store, executor-side
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
+        return final.localCheckpoint(eager=True)
 
 
 _KMV_STREAM_BATCHES = 3
@@ -1391,16 +1400,15 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     store (production drops it) grows with distinct content."""
     from gmt_dbt_spark.operators.stats import KMV_K, kmv_hash
 
-    run_dir = os.path.join(SCRATCH, f"stream_kmv_{uuid.uuid4().hex[:8]}")
-    src_dir = os.path.join(run_dir, "src")
-    hstore = os.path.join(run_dir, "seen")
-    ckpt = os.path.join(run_dir, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
     out_schema = (
         "batch_key bigint, k_used bigint, h_k bigint,"
         " est_distinct bigint, exact_distinct bigint"
     )
-    try:
+    with scratch_dir("stream_kmv") as run_dir:
+        src_dir = os.path.join(run_dir, "src")
+        hstore = os.path.join(run_dir, "seen")
+        ckpt = os.path.join(run_dir, "ckpt")
+        os.makedirs(src_dir, exist_ok=True)
         docs = (
             table(spark, sf_dir, "documents")
             .select("doc_id", "text")
@@ -1493,5 +1501,3 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not report_rows:
             return spark.createDataFrame([], out_schema)
         return spark.createDataFrame(report_rows, out_schema)
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)

@@ -10,10 +10,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from gmt_dbt_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
-# Driver-scale directory for the few tests that need sf0.01 statistics
-# (e.g. the hash-family pair-set pin, where sf0.001 has too few
-# near-dup pairs to exercise the recall curve).
-SF01_DIR = "/root/testdata/sf0.01"
 
 
 @pytest.fixture(scope="session")

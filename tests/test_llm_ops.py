@@ -728,49 +728,6 @@ def test_unimax_edge_cases(spark):
     assert sum(allocs) == 15 * 9 // 10
 
 
-def test_hash_family_flag_same_verified_pairs(spark):
-    """The production hash flag (spark.gmt_dbt.hash_family=xxhash64)
-    must change NOTHING a user can observe at the dedup surface: the
-    verified pair set at sf0.01 is identical under both families.
-    Base hashes differ, so bucket keys and raw candidate sets differ —
-    but the exact-Jaccard verify kills false candidates and the
-    4-band/3-row recall curve catches every >=0.6 pair under either
-    family at this scale. Pinning SET equality (not just counts)
-    proves the flag is a pure throughput knob, costing zero oracle
-    coverage (every registered query runs under the md5 default)."""
-    from gmt_dbt_spark.catalog import table
-    from gmt_dbt_spark.operators.dedup import lsh_candidate_ids
-    from tests.conftest import SF01_DIR
-
-    sf_dir = SF01_DIR
-    docs = table(spark, sf_dir, "documents")
-
-    def verified_pairs():
-        sig = minhash_signature(docs, "doc_id", "text").localCheckpoint(
-            eager=True
-        )
-        out = verify_jaccard(
-            lsh_candidates(sig),
-            docs,
-            "doc_id",
-            "text",
-            0.6,
-            cand_ids=lsh_candidate_ids(sig).toDF("doc_id"),
-            shingle=True,
-        )
-        return {(r.id_a, r.id_b) for r in out.select("id_a", "id_b").collect()}
-
-    assert spark.conf.get("spark.gmt_dbt.hash_family", "md5") == "md5"
-    md5_pairs = verified_pairs()
-    spark.conf.set("spark.gmt_dbt.hash_family", "xxhash64")
-    try:
-        xx_pairs = verified_pairs()
-    finally:
-        spark.conf.unset("spark.gmt_dbt.hash_family")
-    assert md5_pairs, "fixture must contain planted near-dups"
-    assert xx_pairs == md5_pairs
-
-
 def test_simhash_signature_size_unbounded(spark):
     """The 64-sum signature build has NO per-doc size limit (the
     packed-lane alternative needed a 32,767-distinct-token truncation

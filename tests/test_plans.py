@@ -1771,8 +1771,7 @@ def test_unicode_minhash_signature_single_shuffle(spark):
     from gmt_dbt_spark.operators.dedup import minhash_signature
 
     sig = minhash_signature(
-        table(spark, SF_DIR, "documents"), "doc_id", "text", "md5",
-        unicode=True,
+        table(spark, SF_DIR, "documents"), "doc_id", "text", unicode=True
     )
     tree = tree_of(plan_of(sig))
     assert tree.count("Exchange") - tree.count("BroadcastExchange") == 1, tree

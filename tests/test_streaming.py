@@ -344,8 +344,8 @@ def test_replay_cache_variant_and_invalidation(spark, tmp_path):
     import shutil
     import uuid
 
+    from gmt_dbt_spark.sources.sinks import SCRATCH
     from gmt_dbt_spark.streaming.stateful import (
-        SCRATCH,
         _frame_fingerprint,
         _replay_cache_dir,
         write_replay,

@@ -179,6 +179,31 @@ def test_delete_keys_touches_only_affected_partitions(spark, tmp_path):
     assert files_of("c") == before_c
 
 
+def test_partitioned_writes_leave_session_overwrite_mode_alone(spark, tmp_path):
+    """upsert_partitioned and delete_keys_partitioned overwrite
+    dynamically through a write option, never through the session
+    conf: a caller pinned to `static` still reads `static` after both,
+    and both rewrites still kept the partitions they did not touch."""
+    from gmt_dbt_spark.operators.upsert import delete_keys_partitioned
+    from gmt_dbt_spark.session import scoped_conf
+
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    path = str(tmp_path / "t")
+    schema = "id bigint, part string"
+    spark.createDataFrame(
+        [(i, ["a", "b"][i % 2]) for i in range(10)], schema
+    ).write.partitionBy("part").parquet(path)
+    with scoped_conf(spark, **{conf: "static"}):
+        batch = spark.createDataFrame([(0, "a"), (99, "a")], schema)
+        upsert_partitioned(spark, path, batch, ["id"], "part")
+        doomed = spark.createDataFrame([(1,)], "id bigint")
+        delete_keys_partitioned(spark, path, doomed, "id", "part")
+        assert spark.conf.get(conf) == "static"
+    out = spark.read.parquet(path)
+    assert out.filter(F.col("part") == "a").count() == 6  # 5 + 1 insert
+    assert out.filter(F.col("part") == "b").count() == 4  # 5 - 1 deleted
+
+
 def test_evolve_adds_staging_column_null_backfilled(spark, target, staging):
     """A column the producer STARTED sending is added to the target
     with NULLs on every kept row; merged-in rows carry its values."""
